@@ -81,17 +81,17 @@ object Bm25 {
     * Shared by the initial build and streaming maintenance. */
   private def deriveFromTf(spark: SparkSession, dir: String): Unit = {
     val tfIdx = spark.read.parquet(s"$dir/tf")
-    // df/ and stats/ both derive from the WRITTEN tf relation and are
-    // independent of each other — overlap the two jobs (guide §2.6)
-    ParJobs.run(
-      () => tfIdx.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-        // df ≤ tf bytes; size its write by the written tf store
-        .repartition(Compaction.writerWidth(tfIdx), col("tok"))
-        .sortWithinPartitions(col("tok"))
-        .write.mode("overwrite").parquet(s"$dir/df"),
-      () => tfIdx.select(col("doc_id"), col("dl")).distinct()
-        .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot_dl"))
-        .write.mode("overwrite").parquet(s"$dir/stats"))
+    tfIdx.groupBy(col("tok")).agg(count(lit(1)).as("df"))
+      // df ≤ tf bytes; size its write by the written tf store
+      .repartition(Compaction.writerWidth(tfIdx), col("tok"))
+      .sortWithinPartitions(col("tok"))
+      .write.mode("overwrite").parquet(s"$dir/df")
+    // stats/ strictly AFTER df/ has committed: `stats/_SUCCESS` is
+    // [[ensureIndex]]'s build marker, so writing the two concurrently
+    // let a crash leave a "built" index with no df/
+    tfIdx.select(col("doc_id"), col("dl")).distinct()
+      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tot_dl"))
+      .write.mode("overwrite").parquet(s"$dir/stats")
   }
 
   /** Committed staged-batch dirs under `dir/batches`, sorted for

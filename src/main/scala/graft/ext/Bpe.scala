@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Byte-pair-encoding TRAINING primitives — the tokenizer-side
   * counterpart of the token-counting/vocab operators (Sennrich et al.
@@ -267,8 +268,15 @@ object Bpe {
     * subtree re-applies the merges over all distinct words: measured
     * 6.1 s → ~3.1 s on the round-trip query at sf0.1).
     *
+    * The INPUT is read once: `df` is persisted on entry and both merge
+    * training (its word counts) and encoding (the word and EOS rows)
+    * read that copy, so the plan upstream of `df` — a curation gate
+    * chain, say — runs once per call instead of twice. A `df` the
+    * caller already cached is read as it is and left to the caller.
+    *
     * CACHE CONTRACT: both returned relations stay LAZY over the
-    * persisted distinct-word relation, so it cannot be unpersisted
+    * persisted input `df`, its persisted (w, wc) word counts and the
+    * persisted distinct-word relation, so none can be unpersisted
     * here. Wrap the call and its materialization in
     * [[CacheScope.withScope]] to release it on exit (the loan
     * pattern); outside a scope the cache lives for the session —
@@ -278,8 +286,11 @@ object Bpe {
     * as [[Packing.packSequences]]. */
   def encodeIdsWithVocab(df: DataFrame, idCol: String, textCol: String,
                          k: Int): (DataFrame, DataFrame) = {
-    val (wids, vocab) = wordIdRelationWithVocab(df, textCol, k)
-    (encodeIdsAgainst(df, idCol, textCol, wids), vocab)
+    val in =
+      if (df.storageLevel != StorageLevel.NONE) df
+      else CacheScope.register(df.persist())
+    val (wids, vocab) = wordIdRelationWithVocab(in, textCol, k)
+    (encodeIdsAgainst(in, idCol, textCol, wids), vocab)
   }
 
   /** The FROZEN model's word → subword-id relation (w, spos, tid):
@@ -356,13 +367,11 @@ object Bpe {
     * (tid 0) are appended per document, as in [[encodeIds]]. */
   def encodeIdsAgainst(df: DataFrame, idCol: String, textCol: String,
                        wids: DataFrame): DataFrame = {
-    val words = df
-      .select(col(idCol).as("__id"),
+    df.select(col(idCol).as("__id"),
         posexplode(split(col(textCol), " ")).as(Seq("__wp0", "w")))
       .filter(col("w") =!= "")
-      .select(col("__id"), (col("__wp0") + 1).as("wpos"), col("w"))
-    words.join(wids, "w")
-      .select(col("__id").as(idCol), col("wpos"), col("spos"), col("tid"))
+      .join(wids, "w")
+      .select(col("__id").as(idCol), (col("__wp0") + 1).as("wpos"), col("spos"), col("tid"))
       .unionByName(df.select(col(idCol),
         lit(Int.MaxValue).as("wpos"), lit(0).as("spos"), lit(0L).as("tid")))
   }
@@ -406,7 +415,7 @@ object Bpe {
       merges.foreach { case (l, r) => syms = applyOne(syms, l, r) }
       syms
     }
-    wc.select(col("w")).withColumn("__sy", symsUdf(col("w")))
+    wc.select(col("w"), symsUdf(col("w")).as("__sy"))
   }
 
   /** Symbol ranks of a distinct-word relation. The single-partition

@@ -5,7 +5,7 @@ import org.apache.spark.sql.Dataset
 /** Scoped release for the library's shared-core caches — the loan
   * pattern that finishes the CACHE CONTRACT story on
   * [[Bpe.encodeIdsWithVocab]] / [[Packing.packSequences]] /
-  * [[Unigram.wordPieceRelation]]: those entry points persist a small
+  * [[Unigram.wordPieceRelation]]: those entry points persist a
   * relation that feeds MULTIPLE returned/consumed subtrees (the
   * measured 2× win their scaladocs quote) and hand back plans that stay
   * LAZY over it, so they cannot unpersist before returning. Wrapping

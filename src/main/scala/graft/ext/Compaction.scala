@@ -104,10 +104,8 @@ object Compaction {
     // the sentinel and fall back to the session shuffle width (the
     // deployment's scale knob), keeping the size-derived width only
     // when the estimate is a real one.
-    val sentinel = BigInt(spark.conf
-      .get("spark.sql.defaultSizeInBytes", Long.MaxValue.toString).toLong)
-    if (bytes >= sentinel)
-      spark.conf.get("spark.sql.shuffle.partitions").toInt.max(1)
+    val conf = spark.sessionState.conf
+    if (bytes >= BigInt(conf.defaultSizeInBytes)) conf.numShufflePartitions.max(1)
     else {
       val t = BigInt(TargetFileBytes)
       ((bytes + t - 1) / t).max(1).min(1 << 20).toInt

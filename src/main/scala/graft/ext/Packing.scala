@@ -35,44 +35,45 @@ object Packing {
   /** Pack per-document token-id rows ([[Bpe.encodeIds]]'s
     * (id, wpos, spos, tid) relation, EOS boundary rows included) into
     * fixed-length training sequences: documents concatenate in id
-    * order, each token takes global position `doc offset + rank
-    * within doc`, and position p lands in sequence p div seqLen at
-    * slot p mod seqLen — GPT-style sequence packing, document
-    * boundaries carried by the EOS tokens. Returns (seq_id, seq_len,
-    * n_docs, ids) where `n_docs` counts the documents ENDING in the
-    * sequence and `ids` is the space-joined token-id string in slot
-    * order (only the tail sequence has seq_len < seqLen).
+    * order, each document's tokens in (wpos, spos) order, and global
+    * position p lands in sequence p div seqLen at slot p mod seqLen —
+    * GPT-style sequence packing, document boundaries carried by the
+    * EOS tokens. Returns (seq_id, seq_len, n_docs, ids) where `n_docs`
+    * counts the EOS tokens (tid 0) in the sequence — the documents
+    * ENDING in it — and `ids` is the space-joined token-id string in
+    * slot order (only the tail sequence has seq_len < seqLen).
     *
-    * Scale shape: the only order-carrying computation is the global
-    * prefix sum of per-document token counts, and it runs as a
-    * TWO-LEVEL scan — range-partition the (id, count) relation, local
-    * prefix sums per partition (parallel windows keyed by partition
-    * id), then one tiny window over the per-partition totals
-    * (numPartitions rows) joined back broadcast. No single-partition
-    * pass ever sees the per-document relation whole, and document
-    * CONTENT (the token rows) only moves through the per-document
-    * rank window and the final per-sequence aggregation — both keyed
-    * shuffles, no global sort of tokens.
+    * Scale shape: what crosses each shuffle —
+    *  1. the token rows, ONCE: one `groupBy(id)` gathers each
+    *     document's tids, sorted by (wpos, spos), into one array row;
+    *  2. (id, n) rows, one per document, through the TWO-LEVEL offset
+    *     scan: range-partition, local prefix sums per partition, then
+    *     one window over the numPartitions per-partition totals joined
+    *     back broadcast — no single-partition pass ever sees the
+    *     per-document relation whole;
+    *  3. (id, offset) rows joined back to the document arrays;
+    *  4. one `slice` of a document's array per sequence the document
+    *     overlaps, grouped by seq_id: a sequence is the slot-ordered
+    *     concatenation of its few slices.
+    * No global sort and no per-token row after step 1. The bound this
+    * buys: ONE document's tokens must fit in one row (one array in one
+    * task's memory, < 2³¹ elements) — a document longer than that must
+    * be split upstream.
     *
-    * CACHE CONTRACT: the shared core persists the token relation (it
-    * feeds two differently-exchanged subtrees; without the persist the
-    * upstream tokenization runs twice — measured 12 s → 7 s at sf0.1)
-    * and the returned plan stays LAZY over that cached relation, so
-    * the entry cannot be unpersisted here. Wrap the call and its
-    * materialization in [[CacheScope.withScope]] to release it on exit
-    * (the loan pattern); outside a scope the cache lives for the
-    * session — `spark.catalog.clearCache()` between packings
-    * (Bench/Verify do both). A long-lived service should instead
-    * materialize the token relation to storage once and pack from the
-    * materialized copy. Same contract as [[Bpe.encodeIdsWithVocab]]. */
+    * CACHE CONTRACT: the core persists the per-document array relation
+    * (it feeds the offset scan AND the slicing; without the persist the
+    * upstream tokenization runs twice) and the returned plan stays
+    * LAZY over that cached relation, so the entry cannot be unpersisted
+    * here. Wrap the call and its materialization in
+    * [[CacheScope.withScope]] to release it on exit (the loan pattern);
+    * outside a scope the cache lives for the session —
+    * `spark.catalog.clearCache()` between packings (Bench/Verify do
+    * both). A long-lived service should instead materialize the token
+    * relation to storage once and pack from the materialized copy.
+    * Same contract as [[Bpe.encodeIdsWithVocab]]. */
   def packSequences(toks: DataFrame, idCol: String, seqLen: Int): DataFrame =
-    globalPositions(toks, idCol, seqLen)
-      .groupBy(col("seq_id"))
-      .agg(count(lit(1)).as("seq_len"),
-        sum(when(col("tid") === 0L, 1L).otherwise(0L)).as("n_docs"),
-        array_join(transform(
-          array_sort(collect_list(struct(col("__sp"), col("tid")))),
-          s => s.getField("tid").cast("string")), " ").as("ids"))
+    packedIds(toks, idCol, seqLen)
+      .select(col("seq_id"), seqLenCol, nDocsCol, idString.as("ids"))
 
   /** [[packSequences]] plus the per-slot `doc_idx` column a training
     * consumer needs to MASK cross-document attention inside a packed
@@ -82,30 +83,23 @@ object Packing {
     * belongs to the document it closes. Emits (seq_id, seq_len, n_docs,
     * ids, doc_idx) — `doc_idx` space-joined in slot order like `ids`.
     *
-    * Same two-level scan as [[packSequences]] (shared
-    * [[globalPositions]]); the EOS prefix count folds inside the
-    * per-sequence row over the already-collected slot array — no new
-    * global pass. */
+    * Same packing as [[packSequences]] (shared [[packedIds]]); the EOS
+    * prefix count folds inside the per-sequence row over the
+    * already-assembled slot array — no new global pass. */
   def packSequencesWithDocIdx(toks: DataFrame, idCol: String,
                               seqLen: Int): DataFrame =
-    globalPositions(toks, idCol, seqLen)
-      .groupBy(col("seq_id"))
-      .agg(count(lit(1)).as("seq_len"),
-        sum(when(col("tid") === 0L, 1L).otherwise(0L)).as("n_docs"),
-        array_sort(collect_list(struct(col("__sp"), col("tid")))).as("__slots"))
-      .select(col("seq_id"), col("seq_len"), col("n_docs"),
-        array_join(transform(col("__slots"),
-          s => s.getField("tid").cast("string")), " ").as("ids"),
+    packedIds(toks, idCol, seqLen)
+      .select(col("seq_id"), seqLenCol, nDocsCol, idString.as("ids"),
         // exclusive running EOS count per slot, built as RUN-LENGTH
-        // segments from the sparse EOS-position array: slots are the
+        // segments from the sparse EOS-slot array: slots are the
         // consecutive positions 0..seq_len-1, so dx is [0]×(e₁+1) ++
         // [1]×(e₂-e₁) ++ … ++ [k]×(L-1-e_k) — one fold over the ≤
         // docs-per-sequence EOS list, O(L·k) total. (A fold appending
         // per SLOT would copy its accumulator per element: O(L²) per
         // sequence, measured as this query's dominant cost at sf0.1.)
         aggregate(
-          transform(filter(col("__slots"), e => e.getField("tid") === 0L),
-            e => e.getField("__sp")),
+          filter(sequence(lit(0L), size(col("__ids")).cast("long") - 1),
+            i => element_at(col("__ids"), (i + 1).cast("int")) === 0L),
           struct(lit(0).as("i"), lit(-1L).as("prev"),
             array().cast("array<string>").as("o")),
           (st, e) => struct(
@@ -116,8 +110,15 @@ object Packing {
                 (e - st.getField("prev")).cast("int"))).as("o")),
           st => array_join(concat(st.getField("o"),
             array_repeat(st.getField("i").cast("string"),
-              (size(col("__slots")) - 1 - st.getField("prev")).cast("int"))),
+              (size(col("__ids")) - 1 - st.getField("prev")).cast("int"))),
             " ")).as("doc_idx"))
+
+  /** `seq_len`, `n_docs` (its EOS count) and `ids` (the slot array
+    * space-joined) of a [[packedIds]] row. */
+  private def seqLenCol = size(col("__ids")).cast("long").as("seq_len")
+  private def nDocsCol = size(filter(col("__ids"), t => t === 0L)).cast("long").as("n_docs")
+  private def idString =
+    array_join(transform(col("__ids"), t => t.cast("string")), " ")
 
   /** Length-bucketed batching: rank documents by (length DESC, id) and
     * cut the ranking into consecutive batches of `batchSize` — inside a
@@ -151,32 +152,51 @@ object Packing {
         expr(s"__rk div $batchSize").as("batch_id"))
   }
 
-  /** The shared packing core: global token position for every token
-    * row, as (tid, seq_id, __sp). The only order-carrying computation
-    * is the per-document-count prefix sum, run as a TWO-LEVEL scan —
-    * see the scaladoc on [[packSequences]]'s original definition
-    * (local per-partition windows + one numPartitions-row window
-    * broadcast back; no global sort of token rows). */
-  private def globalPositions(toksIn: DataFrame, idCol: String,
-                              seqLen: Int): DataFrame = {
+  /** The shared packing core: (seq_id, __ids) with `__ids` the
+    * sequence's token ids in slot order. Per-document arrays, the
+    * two-level offset scan over (id, n) rows, one slice per (document,
+    * overlapped sequence) — see the scale shape on [[packSequences]].
+    * Every Dataset step re-analyzes the caller's whole lineage, so the
+    * plan is built in as few steps as the computation allows. */
+  private def packedIds(toks: DataFrame, idCol: String, seqLen: Int): DataFrame = {
     require(seqLen > 0, s"seqLen must be positive: $seqLen")
-    // the token relation feeds TWO subtrees (the per-doc counts for the
-    // offset scan, and the per-token rank window) whose exchanges
-    // differ — without a persist the whole upstream tokenization runs
-    // twice (measured 12 s → ~7 s on q_pack_attention at sf0.1). At
-    // cluster scale this persist is the "materialize the tokenized
-    // relation once" step a production pipeline does to storage anyway.
-    val toks = CacheScope.register(toksIn.persist())
-    tokenPositions(toks, idCol)
-      .select(col("tid"), expr(s"__gp div $seqLen").as("seq_id"),
-        (col("__gp") % seqLen).as("__sp"))
+    // the document arrays feed TWO subtrees (the (id, n) offset scan
+    // and the slicing) whose exchanges differ — without a persist the
+    // whole upstream tokenization runs twice. At cluster scale this
+    // persist is the "materialize the tokenized relation once" step a
+    // production pipeline does to storage anyway.
+    val docs = CacheScope.register(toks.groupBy(col(idCol))
+      .agg(transform(sort_array(collect_list(struct(col("wpos"), col("spos"), col("tid")))),
+        t => t.getField("tid")).as("__tids"))
+      .persist())
+    val offs = docOffsets(
+      docs.select(col(idCol), size(col("__tids")).cast("long").as("__nd")), idCol)
+    // document [off, end) overlaps sequences off div L .. (end-1) div L;
+    // its slice in sequence s covers the global positions
+    // [max(s·L, off), min((s+1)·L, end)) and starts at slot
+    // max(s·L, off) - s·L
+    val end = col("__off") + size(col("__tids"))
+    val a = greatest(col("seq_id") * seqLen, col("__off"))
+    val b = least((col("seq_id") + 1) * seqLen, end)
+    docs.join(offs, idCol)
+      .select(col("__tids"), col("__off"),
+        explode(sequence(expr(s"__off div $seqLen"),
+          expr(s"(__off + size(__tids) - 1) div $seqLen"))).as("seq_id"))
+      .groupBy(col("seq_id"))
+      .agg(flatten(transform(
+        sort_array(collect_list(struct((a - col("seq_id") * seqLen).as("__sp"),
+          slice(col("__tids"), (a - col("__off") + 1).cast("int"), (b - a).cast("int"))
+            .as("__s")))),
+        s => s.getField("__s"))).as("__ids"))
   }
 
-  /** The raw (tid, __gp) token-position relation of [[globalPositions]]
-    * without the sequence split — the carry path consumes it with an
-    * offset. Caller manages persistence of `toks`. */
-  private def tokenPositions(toks: DataFrame, idCol: String): DataFrame = {
-    val counts = toks.groupBy(col(idCol)).agg(count(lit(1)).as("__nd"))
+  /** Exclusive prefix sum of the per-document counts `__nd` in
+    * `idCol` order, as (idCol, __off) — the TWO-LEVEL scan:
+    * range-partition the (id, count) relation, local prefix sums per
+    * partition (parallel windows keyed by partition id), then one tiny
+    * window over the per-partition totals (numPartitions rows) joined
+    * back broadcast. */
+  private def docOffsets(counts: DataFrame, idCol: String): DataFrame = {
     val parts = counts
       .repartitionByRange(col(idCol))
       .withColumn("__pid", spark_partition_id())
@@ -190,8 +210,17 @@ object Packing {
         coalesce(sum(col("__pt")).over(Window.orderBy(col("__pid")))
           - col("__pt"), lit(0L)))
       .select(col("__pid"), col("__poff"))
-    val offs = local.join(broadcast(ptot), "__pid")
+    local.join(broadcast(ptot), "__pid")
       .select(col(idCol), (col("__loff") + col("__poff")).as("__off"))
+  }
+
+  /** The raw (tid, __gp) token-position relation — one row per token,
+    * each ranked within its document and offset by [[docOffsets]]; the
+    * carry path consumes it with an offset. Caller manages persistence
+    * of `toks`. */
+  private def tokenPositions(toks: DataFrame, idCol: String): DataFrame = {
+    val offs = docOffsets(
+      toks.groupBy(col(idCol)).agg(count(lit(1)).as("__nd")), idCol)
     val ranked = toks.withColumn("__ipos",
       row_number().over(Window.partitionBy(col(idCol))
         .orderBy(col("wpos"), col("spos"))))

@@ -13,7 +13,7 @@ import graft.pipeline.{DocPipeline, Router}
   */
 object PipelineQueries {
 
-  private val FixtureDir = "/root/reference/nifi-extracttext-processors/src/test/resources"
+  private def FixtureDir = graft.ReferenceFixtures.dir
 
   /** The planted page + real-parse link rows shared by q_html_links
     * and q_anchor_text: every document renders to HTML whose three

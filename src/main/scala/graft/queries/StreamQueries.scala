@@ -17,7 +17,7 @@ import graft.streaming.StreamPipeline
   */
 object StreamQueries {
 
-  private val FixtureDir = "/root/reference/nifi-extracttext-processors/src/test/resources"
+  private def FixtureDir = graft.ReferenceFixtures.dir
 
   /** Deterministic per-sf scratch path, WIPED — every streaming query
     * that writes a sink or source dir funnels through this one wipe

@@ -651,12 +651,16 @@ object StreamPipeline {
                  wids: DataFrame, idCol: String, textCol: String,
                  seqLen: Int): Long =
     drainIngestWithId(stream) { (batch, id) =>
-      val toks = graft.ext.Bpe.encodeIdsAgainst(batch, idCol, textCol, wids)
-      graft.ext.Packing.packSequences(toks, idCol, seqLen)
-        .withColumn("bat", lit(id))
-        .select(col("bat"), col("seq_id"), col("seq_len"),
-          col("n_docs"), col("ids"))
-        .write.mode("append").parquet(outDir)
+      // the packer persists the batch's document arrays; release them
+      // with the batch instead of letting them pile up per trigger
+      graft.ext.CacheScope.withScope {
+        val toks = graft.ext.Bpe.encodeIdsAgainst(batch, idCol, textCol, wids)
+        graft.ext.Packing.packSequences(toks, idCol, seqLen)
+          .withColumn("bat", lit(id))
+          .select(col("bat"), col("seq_id"), col("seq_len"),
+            col("n_docs"), col("ids"))
+          .write.mode("append").parquet(outDir)
+      }
     }
 
   private def hadoopFs(spark: SparkSession, dir: String) = {

@@ -29,19 +29,33 @@ class CacheScopeSpec extends AnyFunSuite {
 
   test("encodeIdsWithVocab + packSequences leave no cached relation after the scope") {
     var registered: Seq[org.apache.spark.sql.Dataset[_]] = Seq.empty
+    val input = docs
     val n = CacheScope.withScope {
-      val (toks, vocab) = Bpe.encodeIdsWithVocab(docs, "doc_id", "text", 16)
+      val (toks, vocab) = Bpe.encodeIdsWithVocab(input, "doc_id", "text", 16)
       val packed = Packing.packSequences(toks, "doc_id", 8)
       val out = packed.count() + vocab.count()
       registered = CacheScope.activeRelations
       // inside the scope the shared relations ARE cached (the reuse win)
       assert(registered.nonEmpty)
+      // the encoder's input is persisted once and registered too
+      assert(registered.exists(_ eq input))
       assert(storageLevels(registered).forall(_ != StorageLevel.NONE))
       out
     }
     assert(n > 0)
     // after the scope every registered relation is released
     assert(storageLevels(registered).forall(_ == StorageLevel.NONE))
+  }
+
+  test("an input the caller cached stays cached after the scope") {
+    val input = docs.persist()
+    try {
+      CacheScope.withScope {
+        assert(Bpe.encodeIds(input, "doc_id", "text", 8).count() > 0)
+        assert(!CacheScope.activeRelations.exists(_ eq input))
+      }
+      assert(input.storageLevel != StorageLevel.NONE)
+    } finally { input.unpersist(); () }
   }
 
   test("unigram wordPieceRelation releases its distinct-word cache at scope exit") {

@@ -416,4 +416,28 @@ class CompactionSpec extends AnyFunSuite {
     assert(pruned.count() < rowsBefore)
     assert(pruned.agg(min(col("ts"))).head.getLong(0) >= 100000L)
   }
+
+  test("bm25 build commits df/ before its stats/ build marker") {
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val dir = tmpDir("bm25order") + "/idx"
+    Bm25.ensureIndex(docs, "doc_id", "text", dir)
+    // stats/_SUCCESS is ensureIndex's marker: it must not predate df/'s
+    // commit, or a crash in between leaves a "built" index with no df/
+    def committed(sub: String) = java.nio.file.Files.getLastModifiedTime(
+      java.nio.file.Paths.get(dir, sub, "_SUCCESS"))
+    assert(committed("stats").compareTo(committed("df")) >= 0)
+  }
+
+  test("writerWidth reads sizes through the typed conf (defaultSizeInBytes=10g)") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.defaultSizeInBytes", "10g")
+    s.conf.set("spark.sql.shuffle.partitions", "6")
+    // an RDD-backed relation has no real size estimate: its stats are
+    // the defaultSizeInBytes sentinel, so the session width applies
+    val rddBacked = s.createDataFrame(spark.sparkContext.parallelize(Seq((1L, "a"))))
+    assert(Compaction.writerWidth(rddBacked) == 6)
+    // a scan-backed relation is sized from its bytes
+    assert(Compaction.writerWidth(s.read.parquet(s"$sf/documents.parquet")) == 1)
+  }
 }

@@ -1,7 +1,7 @@
 package graft.extract
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 /** Port of the reference's 9 JUnit tests (ExtractTextProcessorTest.java,
   * 302 lines) over the same four binary fixtures — the parity gate of
@@ -9,11 +9,8 @@ import java.nio.file.{Files, Paths}
   * prefixes, MIME attribute values, max-length bound, and no failures.
   */
 class ExtractParitySpec extends AnyFunSuite {
-  private val fixtures =
-    "/root/reference/nifi-extracttext-processors/src/test/resources"
-
   private def read(name: String): Array[Byte] =
-    Files.readAllBytes(Paths.get(fixtures, name))
+    Files.readAllBytes(graft.ReferenceFixtures.file(name))
 
   // ETPTest.java:47-69 — PDF text mode
   test("simple.pdf extracts text starting 'A Simple PDF File'") {

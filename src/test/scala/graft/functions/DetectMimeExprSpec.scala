@@ -13,7 +13,7 @@ class DetectMimeExprSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private val fixtures = "/root/reference/nifi-extracttext-processors/src/test/resources"
+  private def fixtures = graft.ReferenceFixtures.dir
 
   test("expression and UDF agree on the fixtures; SQL registration works") {
     val docs = spark.read.format("binaryFile").load(fixtures)

@@ -18,7 +18,7 @@ class PipelineSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
-  private val fixtures = "/root/reference/nifi-extracttext-processors/src/test/resources"
+  private def fixtures = graft.ReferenceFixtures.dir
 
   private def tmp(): String = {
     val d = java.nio.file.Files.createTempDirectory("graft_pipe").toFile

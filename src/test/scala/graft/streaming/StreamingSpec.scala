@@ -109,7 +109,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("document pipeline runs unchanged under streaming ingest (SURVEY §7.3 step 5)") {
     import graft.pipeline.DocPipeline
-    val fixtures = "/root/reference/nifi-extracttext-processors/src/test/resources"
+    val fixtures = graft.ReferenceFixtures.dir
     val schema = spark.read.format("binaryFile").load(fixtures).schema
     val stream = spark.readStream.format("binaryFile")
       .schema(schema) // streaming sources don't infer
